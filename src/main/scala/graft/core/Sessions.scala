@@ -33,6 +33,26 @@ import org.apache.spark.sql.SparkSession
   *    sizing them to data (AQE's partition coalescing is the cluster-
   *    scale fix for exactly this; with AQE off at test scale the static
   *    rule recovers the same win without the stage-by-stage jobs).
+  *  - `codegen.cache.maxEntries` = 1000 (Spark's default is 100): the
+  *    JVM-wide cache of compiled generated classes must hold the working
+  *    set, or every run evicts its own classes and Janino compiles them
+  *    again. Measured working sets (cap 4000, distinct classes): one pass
+  *    of the five perfbench `library` queries 263 (q90 87, q75 69, q23 35,
+  *    q156 31, q177 41; 16 of them change with the input table), one
+  *    IngestDedupApp stream ~160, the heaviest registry query (q181) 219.
+  *    At 100 the `library` pass recompiled all 263 every round (2.2 s of
+  *    Janino in a ~6 s round); at 1000 it compiles none after warm-up.
+  *    1000 holds each of these with headroom and still bounds the cache in
+  *    a long-running consumer that plans new shapes over its life. A
+  *    static conf: it must be set here, before `getOrCreate`.
+  *  - `artifact.isolation.enabled=false`: with isolation on (Spark 4's
+  *    default), every session — and every streaming query, which runs in a
+  *    cloned session — gets its own job-artifact state, so executors load
+  *    its generated classes through a class loader of its own; the codegen
+  *    cache is keyed by class loader, so each new query compiled all of its
+  *    executor-side classes again (87 per IngestDedupApp batch run as its
+  *    own query, 0 with isolation off). Nothing here adds per-session jars
+  *    or files, which is all isolation protects. Static, like the cap.
   *  - Kryo serializer: faster broadcast/shuffle record serialization.
   *  - `locality.wait=0`: no executor topology in local mode; at cluster
   *    scale this would be left at default.
@@ -62,6 +82,11 @@ object Sessions {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+
+  /** Capacity of Spark's compiled-class cache (see the class doc). */
+  val CodegenCacheEntries = 1000
 
   /** Size `spark.sql.shuffle.partitions` (a runtime conf) to the input
     * under `dataDir`: one reduce partition per ~32 MB of input, floored at

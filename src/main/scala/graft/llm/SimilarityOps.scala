@@ -2376,12 +2376,21 @@ object SimilarityOps {
     * model-scale rows in, one row out. The deterministic (s, slot)
     * struct sort fixes the layout; the float→double cast is exact, so
     * the per-slice folds see the identical operands the broadcast-join
-    * form saw. */
+    * form saw. Codes are positions in that layout, so every subspace must
+    * hold the same dense slots 0..K-1: in the (s, slot)-sorted list, entry
+    * i must be slot i mod K, with K = entries / distinct subspaces. A
+    * ragged codebook would shift every later subspace's offsets and yield
+    * wrong codes, so it fails the query instead. */
   private def packedCodebook(cb: DataFrame): DataFrame =
     cb.groupBy().agg(expr(
-      "flatten(transform(array_sort(collect_list(struct(s, slot," +
-        " transform(cv, e -> CAST(e AS DOUBLE)) AS cv)))," +
-        " x -> x.cv))").as("cbflat"))
+        "array_sort(collect_list(struct(s, slot," +
+          " transform(cv, e -> CAST(e AS DOUBLE)) AS cv)))").as("_cb"))
+      .select(expr(
+        """CASE WHEN size(_cb) > 0 AND NOT forall(
+          |    sequence(0, size(_cb) - 1),
+          |    i -> _cb[i].slot = i % (size(_cb) DIV size(array_distinct(_cb.s))))
+          |  THEN raise_error('pq codebook: every subspace must hold the same dense slots 0..K-1')
+          |  ELSE flatten(transform(_cb, x -> x.cv)) END""".stripMargin).as("cbflat"))
 
   private def pqEncodeKeyed(vecs: DataFrame, cb: DataFrame,
       subspaces: Int, keys: Seq[String]): DataFrame = {

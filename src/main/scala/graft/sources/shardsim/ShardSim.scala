@@ -1,8 +1,10 @@
 package graft.sources.shardsim
 
 import java.io.File
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -45,7 +47,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * File I/O notes: line counts are memoized by (path, mtime, size), so a
   * quiet-stream `latestOffset` poll costs one stat per shard and only an
   * actual append triggers a recount. Record files are TSV:
-  * `seq \t partitionKey \t arrivalMicros \t data`.
+  * `seq \t partitionKey \t arrivalMicros \t data`. A reader seeks to its
+  * range's first record by searching byte positions on the `seq` prefix
+  * ([[ShardSim.seekRecord]]) instead of re-reading the file from line 0
+  * every batch, which made a stream's read cost grow quadratically.
   */
 object ShardSim {
   val schema: StructType = StructType(Seq(
@@ -96,6 +101,135 @@ object ShardSim {
         .foldLeft(0L)((n, _) => n + 1)
       finally in.close()
     })
+  }
+
+  /** Every record line starts with its sequence number, zero-padded to 12
+    * digits and followed by a tab; [[ShardSimFixture]] writes the record's
+    * 0-based line index there. */
+  private val SeqDigits = 12
+
+  /** The sequence number of a line starting at `b(i)` (valid bytes end at
+    * `until`), or -1 when the bytes there are not 12 digits and a tab. */
+  private def seqPrefix(b: Array[Byte], i: Int, until: Int): Long = {
+    if (i + SeqDigits >= until || b(i + SeqDigits) != '\t') return -1L
+    var seq = 0L
+    var k = i
+    while (k < i + SeqDigits) {
+      val d = b(k) - '0'
+      if (d < 0 || d > 9) return -1L
+      seq = seq * 10 + d
+      k += 1
+    }
+    seq
+  }
+
+  /** Up to `len` bytes of `ch` from byte `pos` (fewer at the end). */
+  private def readAt(ch: FileChannel, pos: Long, len: Int): Array[Byte] = {
+    val buf = ByteBuffer.allocate(len)
+    while (buf.hasRemaining && ch.read(buf, pos + buf.position()) > 0) ()
+    java.util.Arrays.copyOf(buf.array(), buf.position())
+  }
+
+  /** The first line starting at or after byte `from` (> 0): its start and
+    * sequence number; (size, Long.MaxValue) when no line starts there;
+    * None when that line carries no sequence-number prefix. */
+  private def lineFrom(ch: FileChannel, from: Long, size: Long,
+      window: Int): Option[(Long, Long)] = {
+    var base = from - 1 // the newline ending the line before may sit here
+    var b = readAt(ch, base, window)
+    var nl = b.indexOf('\n'.toByte)
+    while (nl < 0 && b.length == window) {
+      base += b.length
+      b = readAt(ch, base, window)
+      nl = b.indexOf('\n'.toByte)
+    }
+    val start = base + nl + 1
+    if (nl < 0 || start >= size) return Some((size, Long.MaxValue))
+    val seq =
+      if (nl + 1 + SeqDigits < b.length) seqPrefix(b, nl + 1, b.length)
+      else seqPrefix(readAt(ch, start, SeqDigits + 1), 0, SeqDigits + 1)
+    if (seq < 0) None else Some((start, seq))
+  }
+
+  /** Start and sequence number of the last newline-terminated line. */
+  @annotation.tailrec
+  private def lastLine(ch: FileChannel, size: Long, len: Long = 256L): Option[(Long, Long)] = {
+    val from = math.max(0L, size - len)
+    val b = readAt(ch, from, (size - from).toInt)
+    val end = b.lastIndexOf('\n'.toByte)
+    val before = if (end <= 0) -1 else b.lastIndexOf('\n'.toByte, end - 1)
+    if (before < 0 && from > 0) lastLine(ch, size, len * 2)
+    else if (end < 0) None
+    else {
+      val seq = seqPrefix(b, before + 1, end)
+      if (seq < 0) None else Some((from + before + 1, seq))
+    }
+  }
+
+  /** Byte position of record `n` in a shard file, found by searching byte
+    * positions on the lines' sequence-number prefixes: interpolation
+    * between the two lines that bracket it, every third probe a bisection
+    * so uneven line lengths cannot stall it. A few reads of about one line
+    * each, where skipping to the record reads every line before it. None
+    * when the file does not follow the prefix convention (its first line,
+    * or a line the search meets, has no prefix or an out-of-order one);
+    * the reader then skips lines instead. */
+  def seekRecord(file: String, n: Long): Option[Long] = {
+    if (n == 0) return Some(0L)
+    val ch = FileChannel.open(Paths.get(file), StandardOpenOption.READ)
+    try {
+      val size = ch.size()
+      if (seqPrefix(readAt(ch, 0, SeqDigits + 1), 0, SeqDigits + 1) != 0L) return None
+      // record n starts after lo's start and before `bound` (≤ hi's start)
+      var lo = (0L, 0L)
+      var hi = lastLine(ch, size) match {
+        case Some(last) if last._2 >= n => last
+        case _ => return None
+      }
+      if (hi._2 == n) return Some(hi._1)
+      var bound = hi._1
+      var misses = 0
+      while (bound - lo._1 > 1) {
+        val avg = (hi._1 - lo._1).toDouble / (hi._2 - lo._2)
+        val guess =
+          if (misses == 2) (lo._1 + bound) / 2
+          else lo._1 + ((n - lo._2 - 0.5) * avg).toLong
+        misses = if (misses == 2) 0 else misses + 1
+        val p = math.min(math.max(guess, lo._1 + 1), bound - 1)
+        lineFrom(ch, p, size, math.min(avg.toInt + SeqDigits + 4, 1 << 16)) match {
+          case None => return None
+          case Some((s, _)) if s >= bound => bound = p
+          case Some((s, seq)) if seq == n => return Some(s)
+          case Some((s, seq)) if seq <= lo._2 || seq >= hi._2 => return None
+          case Some(line) if line._2 < n => lo = line
+          case Some(line) => hi = line; bound = line._1
+        }
+      }
+      None
+    } finally ch.close()
+  }
+
+  /** A line reader over `file` from byte `pos`. The channel underneath
+    * answers each read with at most 512 bytes, so the reader fetches little
+    * beyond the lines asked of it (a plain stream reads 8 KiB ahead, more
+    * than one shard's share of a small batch). */
+  private[shardsim] def linesFrom(file: String, pos: Long): java.io.BufferedReader = {
+    val ch = FileChannel.open(Paths.get(file), StandardOpenOption.READ)
+    val in = new java.io.InputStream {
+      private var at = pos
+      override def read(): Int = {
+        val one = new Array[Byte](1)
+        if (read(one, 0, 1) <= 0) -1 else one(0) & 0xff
+      }
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        val n = ch.read(ByteBuffer.wrap(b, off, math.min(len, 512)), at)
+        if (n > 0) at += n
+        n
+      }
+      override def close(): Unit = ch.close()
+    }
+    new java.io.BufferedReader(
+      new java.io.InputStreamReader(in, StandardCharsets.UTF_8.newDecoder()), 512)
   }
 
   /** Offsets = per-shard consumed-record counts, JSON `{"shard-0":12,...}`
@@ -170,6 +304,7 @@ class ShardSimMicroBatchStream(path: String, options: Map[String, String])
 
   private val maxRecordsPerBatch: Option[Long] =
     options.get("maxrecordsperbatch").map(_.toLong)
+  require(maxRecordsPerBatch.forall(_ > 0), "maxRecordsPerBatch must be positive")
   private val numSlots: Int = options.getOrElse("numpartitions", "4").toInt
   private val startLatest: Boolean =
     options.getOrElse("startingposition", "earliest").equalsIgnoreCase("latest")
@@ -227,14 +362,23 @@ class ShardSimMicroBatchStream(path: String, options: Map[String, String])
       case None => ShardOffsets(ends)
       case Some(cap) =>
         // spread the cap evenly over shards with backlog (reference applies
-        // configRecordBatch per GetRecords page, i.e. per shard poll)
+        // configRecordBatch per GetRecords page, i.e. per shard poll). With
+        // more backlogged shards than the cap, `cap` of them get one record
+        // each; the window starts at (records consumed so far) mod |backlog|,
+        // so successive batches take successive windows and no shard starves
         val backlog = shards.filter(s =>
           ends(s.shardId) > startSeqs.getOrElse(s.shardId, 0L))
-        val perShard = if (backlog.isEmpty) 0L else math.max(1L, cap / backlog.size)
+        val grants: Map[String, Long] =
+          if (backlog.size <= cap)
+            backlog.map(_.shardId -> (cap / math.max(backlog.size, 1))).toMap
+          else {
+            val first = (startSeqs.values.sum % backlog.size).toInt
+            (backlog ++ backlog).slice(first, first + cap.toInt)
+              .map(_.shardId -> 1L).toMap
+          }
         ShardOffsets(shards.map { s =>
           val from = startSeqs.getOrElse(s.shardId, 0L)
-          s.shardId -> (if (backlog.contains(s)) math.min(ends(s.shardId), from + perShard)
-                        else math.min(ends(s.shardId), from))
+          s.shardId -> math.min(ends(s.shardId), from + grants.getOrElse(s.shardId, 0L))
         }.toMap)
     }
   }
@@ -326,16 +470,23 @@ class ShardSimPartitionReader(partition: ShardSim.ShardSimInputPartition,
   private def openCurrent(): Unit = {
     if (reader != null) { reader.close(); reader = null }
     currentShard = UTF8String.fromString(current.shardId)
-    reader = Files.newBufferedReader(Paths.get(current.file), StandardCharsets.UTF_8)
-    // Long-safe range selection (a .toInt slice would silently truncate
-    // past 2^31 records); the skip loop reads and discards lines before
-    // the resume point
     val skip = current.start + posInRange
-    var skipped = 0L
-    while (skipped < skip && reader.readLine() != null) skipped += 1
-    var remaining = current.end - current.start - posInRange
-    lines = Iterator.continually(reader.readLine()).takeWhile(_ != null)
-      .takeWhile { _ => remaining -= 1; remaining >= 0 }
+    var remaining = current.end - skip
+    if (remaining <= 0) { lines = Iterator.empty; return }
+    reader = ShardSim.seekRecord(current.file, skip) match {
+      case Some(pos) => ShardSim.linesFrom(current.file, pos)
+      case None =>
+        // no sequence-number prefixes to search: read and discard the
+        // lines before the resume point (Long-safe, unlike a .toInt slice)
+        val r = Files.newBufferedReader(Paths.get(current.file), StandardCharsets.UTF_8)
+        var skipped = 0L
+        while (skipped < skip && r.readLine() != null) skipped += 1
+        r
+    }
+    // count before reading, so the line after the range is never read
+    lines = Iterator.continually {
+      if (remaining > 0) { remaining -= 1; reader.readLine() } else null
+    }.takeWhile(_ != null)
   }
 
   private def advanceRange(): Boolean = {

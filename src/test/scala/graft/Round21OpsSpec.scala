@@ -72,8 +72,32 @@ class Round21OpsSpec extends SparkSpec {
     }
     // the constructed tie resolves to the lower slot
     val tied = got.values.map(_._1.head).toSet
-    assert(!tied.contains(2) || tied.contains(1),
+    assert(!tied.contains(2),
       "tie in subspace 0 must never pick slot 2 over identical slot 1")
+  }
+
+  test("pq_encode refuses a codebook whose subspaces hold ragged slots") {
+    registered()
+    val vecs = (0L until 4L).map(i =>
+        (i, (0 until 4).map(j => det((i * 4 + j).toInt)))).toDF("vec_id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+    def cb(slots: Seq[(Int, Int)]) = slots
+      .map { case (s, slot) => (s, slot, Seq(det(s * 10 + slot), det(s * 10 + slot + 5))) }
+      .toDF("s", "slot", "cv").withColumn("cv", col("cv").cast("array<float>"))
+    // dense and equal: 2 subspaces x K = 2 encodes
+    assert(SimilarityOps.pqEncode(vecs, cb(Seq((0, 0), (0, 1), (1, 0), (1, 1))), 2)
+      .count() == 4)
+    // 4 entries over 2 subspaces (|cb| % d == 0) but slots 3 + 1, and a gap
+    Seq(Seq((0, 0), (0, 1), (0, 2), (1, 0)), Seq((0, 0), (0, 2), (1, 0), (1, 1)))
+      .foreach { ragged =>
+        val e = intercept[Exception] {
+          SimilarityOps.pqEncode(vecs, cb(ragged), 2).collect()
+        }
+        def messages(t: Throwable): Seq[String] =
+          if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+        assert(messages(e).exists(_.contains("same dense slots 0..K-1")),
+          messages(e).mkString(" | "))
+      }
   }
 
   test("pq_encode residual form ≡ the replaced window/groupBy residual" +

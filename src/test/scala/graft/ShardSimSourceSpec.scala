@@ -163,6 +163,89 @@ class ShardSimSourceSpec extends SparkSpec {
     assert(e2("shard-2") == 5L, e2.toString)
   }
 
+  test("a batch cap below the backlogged shard count holds every batch " +
+      "to the cap, rotates the shards, and still drains everything") {
+    import graft.sources.shardsim.{ShardSim, ShardSimMicroBatchStream}
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val dir = Files.createTempDirectory("shardsim_rotate").toString
+    def row(i: Int) = (s"u$i", 1700000000000000L + i, s"""{"k":$i}""")
+    (0 until 8).foreach(k => ShardSimFixture.writeShard(dir, k, (0 until 10).map(row)))
+    val stream = new ShardSimMicroBatchStream(dir, Map.empty)
+    var start = stream.initialOffset().asInstanceOf[ShardSim.ShardOffsets]
+    var batches = 0
+    var rows = 0L
+    var sizes = Seq.empty[Long]
+    // longest run of batches a backlogged shard went without a record
+    val idle = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    var maxIdle = 0
+    var done = false
+    while (!done) {
+      val end = stream.latestOffset(start, ReadLimit.maxRows(4))
+        .asInstanceOf[ShardSim.ShardOffsets]
+      val grown = end.seqs.map { case (k, v) => k -> (v - start.seqs(k)) }
+      val n = grown.values.sum
+      if (n == 0) done = true
+      else {
+        grown.foreach { case (k, g) =>
+          if (g > 0 || start.seqs(k) == 10L) idle(k) = 0
+          else { idle(k) += 1; maxIdle = math.max(maxIdle, idle(k)) }
+        }
+        sizes :+= n; rows += n; batches += 1; start = end
+      }
+    }
+    assert(sizes.forall(_ <= 4L), sizes.toString)
+    assert(rows == 80L && start.seqs.values.forall(_ == 10L), start.json())
+    assert(batches == 20, s"$batches batches")
+    // 8 shards through 4 slots: each shard is served every other batch
+    assert(maxIdle <= 1, s"a shard waited $maxIdle batches")
+  }
+
+  test("readers seek to ranges mid-file by sequence-number search: same " +
+      "rows as reading from line 0, also after a retry reopen") {
+    import graft.sources.shardsim.{ShardSim, ShardSimPartitionReader}
+    val dir = Files.createTempDirectory("shardsim_seek").toString
+    // uneven line lengths (1..1999 bytes of payload) so interpolation
+    // guesses miss and the search has to correct itself
+    val payloads = (0 until 400).map(i => "x" * ((i * 7919) % 1999 + 1))
+    ShardSimFixture.writeShard(dir, 0, payloads.zipWithIndex.map { case (p, i) =>
+      (s"u$i", 1700000000000000L + i, p) })
+    val plain = Files.createTempDirectory("shardsim_noprefix").toString
+    val plainFile = java.nio.file.Paths.get(plain, "shard-0.tsv")
+    Files.write(plainFile, payloads.zipWithIndex.map { case (p, i) =>
+      s"r$i\tu$i\t${1700000000000000L + i}\t$p\n" }.mkString.getBytes("UTF-8"))
+    val file = ShardSim.listShards(dir).head.file
+    val lines = new String(Files.readAllBytes(java.nio.file.Paths.get(file)), "UTF-8")
+      .split("\n", -1).dropRight(1)
+    val starts = lines.scanLeft(0L)(_ + _.getBytes("UTF-8").length + 1)
+    (0 until 400).foreach(n => assert(ShardSim.seekRecord(file, n.toLong).contains(starts(n)), n))
+    assert(ShardSim.seekRecord(plainFile.toString, 5L).isEmpty)
+
+    def read(f: String, ranges: Seq[(Long, Long)],
+        options: Map[String, String] = Map.empty): Seq[String] = {
+      val r = new ShardSimPartitionReader(ShardSim.ShardSimInputPartition(
+        ranges.map { case (a, b) => ShardSim.ShardRange("shard-0", f, a, b) }), options)
+      try Iterator.continually(r.next()).takeWhile(identity).map { _ =>
+        val row = r.get()
+        s"${row.getUTF8String(0)}\t${row.getUTF8String(1)}\t${row.getLong(2)}\t${row.getUTF8String(3)}"
+      }.toList
+      finally r.close()
+    }
+    val ranges = Seq((0L, 3L), (1L, 2L), (37L, 90L), (200L, 201L), (398L, 400L), (123L, 380L))
+    ranges.foreach { case (a, b) =>
+      assert(read(file, Seq((a, b))) == lines.slice(a.toInt, b.toInt).toSeq, (a, b))
+      assert(read(plainFile.toString, Seq((a, b))).map(_.split("\t")(3)) ==
+        payloads.slice(a.toInt, b.toInt), (a, b))
+    }
+    // a transient failure after 30 rows reopens mid-range: the reader
+    // seeks again to the resume point and emits each row once
+    val marker = Files.createTempDirectory("shardsim_seek_marker").resolve("fired").toString
+    val twoRanges = Seq((37L, 60L), (123L, 150L))
+    assert(read(file, twoRanges, Map("faultinjectmarker" -> marker,
+        "faultinjectafter" -> "30", "retrymaxattempts" -> "1", "retrybasedelayms" -> "1")) ==
+      twoRanges.flatMap { case (a, b) => lines.slice(a.toInt, b.toInt) })
+    assert(Files.exists(java.nio.file.Paths.get(marker)), "the fault must have fired")
+  }
+
   test("no child record is read before its parent drains (per-key order across split)") {
     // per-key order across a split: all parent batches must commit strictly
     // before the first child batch, so a user's pre-split records land first
