@@ -854,7 +854,6 @@ object DedupOps {
     // hash-partitioned on d2 — the label-join key — ONCE here, so the
     // per-round neighbor join never moves the edge table again (the
     // q90/q94 chassis lesson: localCheckpoint preserves partitioning)
-    // GRAFT_CC_NO_FOREST exists for A/B measurement only (BASELINE §v).
     // TWO contraction passes: the first collapses each partition's
     // subgraph to stars around local minima; chains then only survive
     // through nodes SHARED by different partitions' stars, so the
@@ -862,10 +861,7 @@ object DedupOps {
     // merges every shared node's roots and collapses those chains too
     // (a Borůvka level each). q87's 20× ε-graph needed 13 fixpoint
     // rounds after one pass, 5 after two, against maxIters 15.
-    val slim =
-      if (sys.env.contains("GRAFT_CC_NO_FOREST")) pairs
-      else spanningForest(
-        spanningForest(pairs).repartition(col("d2")))
+    val slim = spanningForest(spanningForest(pairs).repartition(col("d2")))
     val (edges, edgeIds) = checkpointed(
       slim.select(explode(array(
           struct(col("d1"), col("d2")),
@@ -944,15 +940,11 @@ object DedupOps {
       }
       val (next, ids) = checkpointed(countedChanges.drop("old_lab"))
       converged = changed.value == 0L
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] iter=$iter changed=${changed.value}")
       drop(labelIds)
       labels = next
       labelIds = ids
       iter += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"[cc] rounds=$iter converged=$converged")
     if (!converged) {
       drop(edgeIds); drop(labelIds)
       throw new IllegalStateException(

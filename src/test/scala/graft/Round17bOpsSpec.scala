@@ -40,6 +40,29 @@ class Round17bOpsSpec extends SparkSpec {
     assert(pred == Set((10L, "a", 2L), (11L, "a", 2L)), pred.toString)
   }
 
+  test("nbPredict: calls on different inputs in one session keep both " +
+      "results' model and token caches") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val docs = Tables.documents(spark, sf0001)
+    def predict(lo: Long) = {
+      val (tc, cs) = ClassifyOps.nbTrainFrames(
+        docs.filter(col("doc_id") >= lo && col("doc_id") < lo + 20))
+      ClassifyOps.nbPredict(tc, cs,
+        docs.filter(col("doc_id") >= lo + 20 && col("doc_id") < lo + 40).drop("lang"))
+    }
+    val (predA, predB) = (predict(0L), predict(40L))
+    // tc, cls and etok: three cached frames, looked up only now, after
+    // the second call pinned its own
+    def caches(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.withCachedData
+        .collect { case r: InMemoryRelation => r.cacheBuilder }.distinct.size
+    try {
+      assert(caches(predA) == 3, "the first call's frames were unpersisted")
+      assert(caches(predB) == 3)
+      assert(predA.count() == 20L && predB.count() == 20L)
+    } finally graft.core.CacheOnce.releaseAll(spark)
+  }
+
   test("NB model lifecycle: stored ≡ direct, append ≡ retrain, unlearn " +
       "is EXACT (train(A∪B) then unlearn(B) scores like train(A))") {
     val docs = Tables.documents(spark, sf0001)
