@@ -336,113 +336,119 @@ object IngestDedupApp {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rejected = (gate.nonEmpty &&
-          graft.operators.QualityOps.check(batch, gate)
-            .collect().exists(_.getInt(2) == 0)) ||
-          driftGate.exists { g =>
-            val cur = batch.select(g.value.as("_v"))
-            val psiTripped = graft.operators.ProfileOps
-              .psiAgainstRef(cur, "_v", g.ref, g.lo, g.hi, g.k)
-              .agg(sum(col("psi_term")).as("psi")).collect()
-              .headOption.exists(_.getDouble(0) > g.maxPsi)
-            def jsTripped = g.maxJs.exists { m =>
-              graft.operators.ProfileOps
-                .jsAgainstRef(cur, "_v", g.ref, g.lo, g.hi, g.k)
-                .agg(sum(col("js_term")).as("js")).collect()
-                .headOption.exists(_.getDouble(0) > m)
-            }
-            def segTripped = (g.segment, g.segRef, g.maxSegPsi) match {
-              case (Some(segc), Some(sref), Some(m)) =>
-                val segCounts = batch
-                  .select(g.value.as("_v"), segc.as("segment"))
-                  .filter(col("_v").isNotNull && col("segment").isNotNull)
-                  .groupBy(col("segment"), graft.operators.ProfileOps
-                    .psiBucket(col("_v"), g.lo, g.hi, g.k).as("bucket"))
-                  .agg(count(lit(1)).as("n_cur"))
-                // only gate on segments the batch actually carries: a
-                // reference segment with zero current rows would smooth
-                // (+0.5/bucket) into a fake uniform distribution and
-                // quarantine small batches for data they don't contain
-                val refPresent = sref.join(
-                  segCounts.select(col("segment")).distinct(),
-                  Seq("segment"), "left_semi")
+        // every arm reads the batch (the gate verdicts, admission and the
+        // routed writes run as separate plans): cache it so the source is
+        // read and decoded once per batch, not once per plan
+        batch.persist()
+        try {
+          val rejected = (gate.nonEmpty &&
+            graft.operators.QualityOps.check(batch, gate)
+              .collect().exists(_.getInt(2) == 0)) ||
+            driftGate.exists { g =>
+              val cur = batch.select(g.value.as("_v"))
+              val psiTripped = graft.operators.ProfileOps
+                .psiAgainstRef(cur, "_v", g.ref, g.lo, g.hi, g.k)
+                .agg(sum(col("psi_term")).as("psi")).collect()
+                .headOption.exists(_.getDouble(0) > g.maxPsi)
+              def jsTripped = g.maxJs.exists { m =>
                 graft.operators.ProfileOps
-                  .segmentedPsiFromCounts(
-                    refPresent.join(segCounts, Seq("segment", "bucket"),
-                      "full"),
-                    g.k)
-                  .agg(max(col("psi")).as("m")).collect()
-                  .headOption.exists(r => !r.isNullAt(0) && r.getDouble(0) > m)
-              case _ => false
+                  .jsAgainstRef(cur, "_v", g.ref, g.lo, g.hi, g.k)
+                  .agg(sum(col("js_term")).as("js")).collect()
+                  .headOption.exists(_.getDouble(0) > m)
+              }
+              def segTripped = (g.segment, g.segRef, g.maxSegPsi) match {
+                case (Some(segc), Some(sref), Some(m)) =>
+                  val segCounts = batch
+                    .select(g.value.as("_v"), segc.as("segment"))
+                    .filter(col("_v").isNotNull && col("segment").isNotNull)
+                    .groupBy(col("segment"), graft.operators.ProfileOps
+                      .psiBucket(col("_v"), g.lo, g.hi, g.k).as("bucket"))
+                    .agg(count(lit(1)).as("n_cur"))
+                  // only gate on segments the batch actually carries: a
+                  // reference segment with zero current rows would smooth
+                  // (+0.5/bucket) into a fake uniform distribution and
+                  // quarantine small batches for data they don't contain
+                  val refPresent = sref.join(
+                    segCounts.select(col("segment")).distinct(),
+                    Seq("segment"), "left_semi")
+                  graft.operators.ProfileOps
+                    .segmentedPsiFromCounts(
+                      refPresent.join(segCounts, Seq("segment", "bucket"),
+                        "full"),
+                      g.k)
+                    .agg(max(col("psi")).as("m")).collect()
+                    .headOption.exists(r => !r.isNullAt(0) && r.getDouble(0) > m)
+                case _ => false
+              }
+              psiTripped || jsTripped || segTripped
             }
-            psiTripped || jsTripped || segTripped
+          if (rejected)
+            batch.select(col("doc_id"), col("text"))
+              .write.mode("overwrite")
+              .parquet(s"$corpusDir/quarantine/batch_id=$batchId")
+          else {
+            // steady state: admission served from the per-batch index
+            // frames (no corpus re-shingle); direct path only for the
+            // empty/legacy-corpus cases the guard rejects
+            val accepted = indexFrames(spark, corpusDir,
+                beforeBatch = Some(batchId)) match {
+              case Some((post, docn, dfRows)) =>
+                graft.llm.DedupOps.admitBatchServed(
+                  post, docn, dfRows, batch, threshold)
+              case None =>
+                graft.llm.DedupOps.admitBatch(
+                  corpus(spark, corpusDir, beforeBatch = Some(batchId)),
+                  batch, threshold)
+            }
+            val admitted = evalGuard match {
+              case Some(g) =>
+                // row-level routing: contaminated ids are a small frame by
+                // the guard's premise; both writes are batch-scale jobs
+                val bad = graft.llm.DedupOps
+                  .contamination(accepted, g.evalDocs, minFrac = g.minFrac)
+                  .select(col("doc_id"))
+                accepted.join(bad, Seq("doc_id"), "left_semi")
+                  .select(col("doc_id"), col("text"))
+                  .write.mode("overwrite")
+                  .parquet(s"$corpusDir/contaminated/batch_id=$batchId")
+                accepted.join(bad, Seq("doc_id"), "left_anti")
+              case None => accepted
+            }
+            val valued = scoreGuard match {
+              case Some(g) =>
+                // pure-projection score — no join, no state; below-line
+                // rows route like the contamination arm
+                val scored = admitted.withColumn("_logw",
+                  graft.llm.TextOps.dsirLogwExpr(col("text"), g.weights,
+                    g.buckets))
+                scored.filter(col("_logw") < g.minLogw)
+                  .select(col("doc_id"), col("text"))
+                  .write.mode("overwrite")
+                  .parquet(s"$corpusDir/lowvalue/batch_id=$batchId")
+                scored.filter(col("_logw") >= g.minLogw).drop("_logw")
+              case None => admitted
+            }
+            val fluent = lmModel match {
+              case Some((g, cnt, voc)) =>
+                // net model view snapshot taken once at run() entry (the
+                // scoreUnderStoredLm read path), scored per batch row
+                val nll = graft.llm.TextOps.perDocNll(
+                    valued.withColumn("lang", lit("und")), cnt, voc, g.addK)
+                  .select(col("doc_id"), col("nll"))
+                val scored = valued.join(nll, Seq("doc_id"), "left")
+                scored.filter(col("nll") > g.maxNll)
+                  .select(col("doc_id"), col("text"))
+                  .write.mode("overwrite")
+                  .parquet(s"$corpusDir/lowquality/batch_id=$batchId")
+                scored.filter(col("nll").isNull || col("nll") <= g.maxNll)
+                  .drop("nll")
+              case None => valued
+            }
+            fluent.select(col("doc_id"), col("text"))
+              .write.mode("overwrite").parquet(s"$corpusDir/batch_id=$batchId")
+            writeBatchIndex(spark, corpusDir, batchId)
           }
-        if (rejected)
-          batch.select(col("doc_id"), col("text"))
-            .write.mode("overwrite")
-            .parquet(s"$corpusDir/quarantine/batch_id=$batchId")
-        else {
-          // steady state: admission served from the per-batch index
-          // frames (no corpus re-shingle); direct path only for the
-          // empty/legacy-corpus cases the guard rejects
-          val accepted = indexFrames(spark, corpusDir,
-              beforeBatch = Some(batchId)) match {
-            case Some((post, docn, dfRows)) =>
-              graft.llm.DedupOps.admitBatchServed(
-                post, docn, dfRows, batch, threshold)
-            case None =>
-              graft.llm.DedupOps.admitBatch(
-                corpus(spark, corpusDir, beforeBatch = Some(batchId)),
-                batch, threshold)
-          }
-          val admitted = evalGuard match {
-            case Some(g) =>
-              // row-level routing: contaminated ids are a small frame by
-              // the guard's premise; both writes are batch-scale jobs
-              val bad = graft.llm.DedupOps
-                .contamination(accepted, g.evalDocs, minFrac = g.minFrac)
-                .select(col("doc_id"))
-              accepted.join(bad, Seq("doc_id"), "left_semi")
-                .select(col("doc_id"), col("text"))
-                .write.mode("overwrite")
-                .parquet(s"$corpusDir/contaminated/batch_id=$batchId")
-              accepted.join(bad, Seq("doc_id"), "left_anti")
-            case None => accepted
-          }
-          val valued = scoreGuard match {
-            case Some(g) =>
-              // pure-projection score — no join, no state; below-line
-              // rows route like the contamination arm
-              val scored = admitted.withColumn("_logw",
-                graft.llm.TextOps.dsirLogwExpr(col("text"), g.weights,
-                  g.buckets))
-              scored.filter(col("_logw") < g.minLogw)
-                .select(col("doc_id"), col("text"))
-                .write.mode("overwrite")
-                .parquet(s"$corpusDir/lowvalue/batch_id=$batchId")
-              scored.filter(col("_logw") >= g.minLogw).drop("_logw")
-            case None => admitted
-          }
-          val fluent = lmModel match {
-            case Some((g, cnt, voc)) =>
-              // net model view snapshot taken once at run() entry (the
-              // scoreUnderStoredLm read path), scored per batch row
-              val nll = graft.llm.TextOps.perDocNll(
-                  valued.withColumn("lang", lit("und")), cnt, voc, g.addK)
-                .select(col("doc_id"), col("nll"))
-              val scored = valued.join(nll, Seq("doc_id"), "left")
-              scored.filter(col("nll") > g.maxNll)
-                .select(col("doc_id"), col("text"))
-                .write.mode("overwrite")
-                .parquet(s"$corpusDir/lowquality/batch_id=$batchId")
-              scored.filter(col("nll").isNull || col("nll") <= g.maxNll)
-                .drop("nll")
-            case None => valued
-          }
-          fluent.select(col("doc_id"), col("text"))
-            .write.mode("overwrite").parquet(s"$corpusDir/batch_id=$batchId")
-          writeBatchIndex(spark, corpusDir, batchId)
-        }
+        } finally batch.unpersist()
       }
       .start()
   }

@@ -989,4 +989,24 @@ class ShardSimSourceSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("bound to checkpoint"), err.getMessage)
   }
+
+  test("ingest dedup reads each micro-batch from the source once") {
+    import graft.app.IngestDedupApp
+    def text(ns: Long): String =
+      (0 until 12).map(t => s"w${ns}t$t").mkString(" ")
+    // 96 docs on one shard, capped at 48 per batch: two batches
+    val rows = (1L to 96L).map { id =>
+      (s"d$id", 1700000000000000L + id, s"""{"doc_id":$id,"text":"${text(id)}"}""")
+    }
+    val shardDir = Files.createTempDirectory("ingonce_shard").toString
+    ShardSimFixture.writeShard(shardDir, 0, rows)
+    val corpus = Files.createTempDirectory("ingonce_corpus").toString
+    val ckpt = Files.createTempDirectory("ingonce_ckpt").toString
+    val q = IngestDedupApp.run(spark, shardDir, corpus, ckpt,
+      maxRecordsPerBatch = Some(48L))
+    q.awaitTermination()
+    val inputRows = q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    assert(inputRows == Seq(48L, 48L), inputRows.mkString(", "))
+    assert(IngestDedupApp.corpus(spark, corpus).count() == 96L)
+  }
 }

@@ -11,7 +11,8 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = graft.core.Sessions.builder("4").appName("graft-test").getOrCreate()
+    val s = graft.core.Sessions.afterCreate(
+      graft.core.Sessions.builder("4").appName("graft-test").getOrCreate())
     s.sparkContext.setLogLevel("WARN")
     s
   }
