@@ -39,7 +39,6 @@ object AnnIngestApp {
       extraOptions: Map[String, String] = Map.empty): DataFrame = {
     val reader = spark.readStream
       .format("graft.sources.shardsim.ShardSimProvider")
-      .option("numPartitions", 4)
       .options(extraOptions)
     maxRecordsPerBatch.foreach(n => reader.option("maxRecordsPerBatch", n))
     reader.load(shardDir)

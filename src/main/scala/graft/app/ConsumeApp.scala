@@ -13,7 +13,10 @@ import org.apache.spark.sql.types._
   *  - masterLoop / controlLoop (src/Kinesis/Coordination.hs:81-112)
   *    → Spark's MicroBatchExecution trigger loop;
   *  - runWorker per shard (src/Kinesis/Coordination.hs:300-337)
-  *    → one task per ShardSimInputPartition;
+  *    → one task per ShardSimInputPartition, each reading a group of
+  *    shards; a batch plans one partition per
+  *    `ShardSim.MinRecordsPerPartition` records, at most one per shard and
+  *    at most `numPartitions`, so a small batch runs as one task;
   *  - Redis checkpoint (src/Kinesis/Redis.hs) → offset/commit WAL under
   *    `checkpointLocation` (exactly-once, stronger than the reference's
   *    max-acked-seq at-least-once);
@@ -35,10 +38,9 @@ object ConsumeApp {
   /** Decoded stream: shardsim records with the payload parsed into columns
     * (the step the reference never does — recordData stays opaque there). */
   def decodedStream(spark: SparkSession, shardDir: String,
-      maxRecordsPerBatch: Option[Long] = None, numPartitions: Int = 4,
+      maxRecordsPerBatch: Option[Long] = None,
       extraOptions: Map[String, String] = Map.empty): DataFrame = {
     val reader = spark.readStream.format("graft.sources.shardsim.ShardSimProvider")
-      .option("numPartitions", numPartitions)
       .options(extraOptions)
     maxRecordsPerBatch.foreach(n => reader.option("maxRecordsPerBatch", n))
     reader.load(shardDir)
@@ -84,13 +86,15 @@ object ConsumeApp {
     * instead of duplicating — the per-record-ack idempotence analog.
     *
     * Exactly-once caveat: truncate-on-open only covers partitions the
-    * replay re-plans. If a replayed epoch plans FEWER partitions than the
-    * crashed attempt (possible when the shard set shrank between attempts),
-    * a stale high-numbered part file from the dead attempt could survive.
-    * The shardsim planner is deterministic for a given shard set, so this
-    * holds here; a production ForeachWriter sink should stage per-epoch
-    * output and commit it atomically (or use foreachBatch, whose batch-dir
-    * overwrite has no such edge). */
+    * replay re-plans. If a replayed epoch planned FEWER partitions than the
+    * crashed attempt, a stale high-numbered part file from the dead
+    * attempt could survive. The shardsim source plans a batch's partition
+    * count from its (start, end) offsets alone, which the offset WAL
+    * replays unchanged, so a replay re-plans every partition id and this
+    * holds here (which shards share a partition may differ, but every
+    * file is rewritten). A production ForeachWriter sink should still
+    * stage per-epoch output and commit it atomically (or use foreachBatch,
+    * whose batch-dir overwrite has no such edge). */
   class TsvRecordWriter(dir: String)
       extends org.apache.spark.sql.ForeachWriter[org.apache.spark.sql.Row] {
     @transient private var w: java.io.BufferedWriter = _

@@ -38,7 +38,6 @@ object IngestDedupApp {
       extraOptions: Map[String, String] = Map.empty): DataFrame = {
     val reader = spark.readStream
       .format("graft.sources.shardsim.ShardSimProvider")
-      .option("numPartitions", 4)
       .options(extraOptions)
     maxRecordsPerBatch.foreach(n => reader.option("maxRecordsPerBatch", n))
     reader.load(shardDir)

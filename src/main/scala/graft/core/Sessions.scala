@@ -165,17 +165,7 @@ object Sessions {
   }
 
   def get(cores: String = "32"): SparkSession = {
-    // Ad-hoc experiment hook: SPARK_GRAFT_EXTRA_CONF="k1=v1,k2=v2"
-    val b = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      .map(_.split("=", 2))
-      .foldLeft(builder(cores)) {
-        case (bb, Array(k, v)) => bb.config(k, v)
-        case (bb, other) =>
-          System.err.println(s"[sessions] ignoring malformed conf entry '${other.mkString("=")}'")
-          bb
-      }
-    val s = afterCreate(b.getOrCreate())
+    val s = afterCreate(builder(cores).getOrCreate())
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -174,7 +174,7 @@ object CorpusOps {
   /** The q169 report-card ARM under a precomputed (possibly STORED)
     * keeper table — the q164 pattern: the CC fixture persists once,
     * the card itself is one stats scan plus |sources|-row joins
-    * (measurable alone via graft.app.ArmScale). */
+    * (measured alone in BASELINE §x). */
   def sourceReportCardWith(docs: DataFrame, keepers: DataFrame)
       : DataFrame = {
     val base = Tables.fanout(docs)

@@ -200,8 +200,8 @@ object DedupOps {
   // q160 — the near-dup SERVE lifecycle (index → persist → admit),
   // the dedup analog of the q157 BM25 serve contract: the ingest loop's
   // remaining corpus-scale cost was re-SHINGLING the whole corpus per
-  // arriving batch inside incrementalNearDup (the measured KeeperScale
-  // slope); with the shingle postings persisted, a batch is admitted
+  // arriving batch inside incrementalNearDup (the slope measured in
+  // BASELINE §v); with the shingle postings persisted, a batch is admitted
   // from index frames alone — no tokenize of old text, ever again.
   // ------------------------------------------------------------------
 
@@ -1376,7 +1376,7 @@ object DedupOps {
   /** The q168 cap-window ARM under a precomputed (possibly STORED)
     * keeper table — the q164 pattern: the expensive CC fixture builds
     * once and persists; the arm itself is one quality scan plus two
-    * component-keyed windows, measurable (graft.app.ArmScale) and
+    * component-keyed windows, measured alone (BASELINE §x) and
     * servable on its own. */
   def clusterCapSampleWith(docs: DataFrame, keepers: DataFrame,
       cap: Int = 2): DataFrame = {
@@ -1748,7 +1748,7 @@ object DedupOps {
     * bulk-dropping a cluster). Rides the shared pair stage.
     *
     * Default rounds = [[DupPagerankIters]] (3), measured, not guessed:
-    * IterStudy at sf0.01/sf0.1 against an 8-round reference shows the
+    * BASELINE §r at sf0.01/sf0.1 against an 8-round reference shows the
     * top-20 hub SET AND ORDER invariant from round 1 on this graph
     * (hub rank tracks degree, which one round already prices), with
     * the score residual shrinking geometrically — max |Δpr| at 3

@@ -59,7 +59,7 @@ import graft.functions.GraftFunctions
 object GraphAnnOps {
   type QFn = (SparkSession, String) => DataFrame
 
-  /** Defaults from the measured GraphProbe grid (n=2000, both
+  /** Defaults from the measured graph-tier grid (BASELINE §y; n=2000, both
     * fixtures): degree is the dominant build lever (6 → 12 doubles
     * isotropic serve recall), rounds buy edge recall at linear cost
     * (isotropic edge recall 0.21 → 0.56 from r2 → r4), beam·hops set

@@ -450,7 +450,7 @@ object SimilarityOps {
     * 6dp, so set-equality of inputs suffices). Every default entry
     * point stays exact for oracle compatibility; this is the swap a
     * 100 TB run makes, with the measured quality delta and train walls
-    * in BASELINE §x (graft.app.KmeansScale). */
+    * in BASELINE §x. */
   def kmeansCentroidsSampled(em: DataFrame, cap: Int = 100000,
       centroidIds: Seq[Long] = CentroidIds,
       iters: Int = KmeansIters): DataFrame = {

@@ -1610,7 +1610,7 @@ object TextOps {
     * the benchmark corpus the df-filtered vocab co-occurrence graph is
     * COMPLETE (every kept term co-occurs with every other above
     * minPair), so the rank vector is exactly uniform and the top-30 is
-    * byte-identical for every iteration count — IterStudy measured
+    * byte-identical for every iteration count — BASELINE §r measured
     * iters 1..6 vs an 8-round reference at sf0.001/0.01/0.1: same set,
     * same order, max |Δscore| 0 at 6 dp. Two rounds (not one) keep the
     * fused-SHJ chassis on the executed path; corpora where degree and

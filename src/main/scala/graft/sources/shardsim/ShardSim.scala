@@ -38,7 +38,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - closed shards are consumed to their end and then planned no more
   *    (completion, src/Kinesis/Coordination.hs:352-353,385);
   *  - shards are grouped into input partitions by the sticky balanced
-  *    [[ShardPlanner]] (max−min<2 invariant, src/Kinesis/Coordination.hs:520).
+  *    [[ShardPlanner]] (max−min<2 invariant, src/Kinesis/Coordination.hs:520);
+  *    a micro-batch gets one partition per [[ShardSim.MinRecordsPerPartition]]
+  *    records, so a small batch is read by one task, not one per slot.
   *
   * Progress/commit bookkeeping is Spark's offset/commit WAL — strictly
   * stronger than the reference's max-acked-seq checkpoint (exactly-once
@@ -245,6 +247,29 @@ object ShardSim {
       ShardOffsets(Entry.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toLong).toMap)
   }
 
+  /** Records per micro-batch input partition: a batch is planned as one
+    * partition per this many records, at most one per active shard and at
+    * most `numPartitions` ([[ShardSimMicroBatchStream.planInputPartitions]]).
+    *
+    * Sized from two costs of ConsumeApp's foreachBatch parquet write task,
+    * taken from perfbench's traced `consume` run (4 vCPUs, 25 triggers of
+    * 400 records per drain; going from 4 tasks per trigger to 1 cut task
+    * CPU by 586–743 ms per drain, 75 tasks fewer, 4 seeds): a fixed c_f ≈ 8.3 ms
+    * of task CPU per task, however few records it holds (deserializing two
+    * copies of the Hadoop conf, generating the `observe()` update
+    * projection, setting up the parquet writer), and c_r ≈ 0.02 ms per
+    * record. Spreading N records over k tasks adds (k − 1)·c_f of CPU and,
+    * on idle cores, saves N·c_r·(1 − 1/k) of wall time; the two are equal
+    * when each task holds c_f / c_r ≈ 400 records. 1,024 is 2.5× that, so
+    * a batch fans out only where the wall time a split saves clearly
+    * exceeds the CPU it costs, and a 400-record trigger (8 ms of record
+    * work) runs as one task instead of four (25 ms more fixed cost).
+    * Paired perfbench `consume` runs (10 seeds): `cpu_s` 5.35 → 3.66 s
+    * against a constant 4 partitions, `wall_s` 1.98 → 1.82 s; at 256 (two
+    * tasks per trigger) `cpu_s` was 4.72 s against 4.24 s at 1,024 (6
+    * seeds) with the same `wall_s`. */
+  val MinRecordsPerPartition = 1024L
+
   /** One reader task: a group of per-shard ranges [start, end). */
   case class ShardRange(shardId: String, file: String, start: Long, end: Long)
   case class ShardSimInputPartition(ranges: Seq[ShardRange]) extends InputPartition
@@ -305,7 +330,8 @@ class ShardSimMicroBatchStream(path: String, options: Map[String, String])
   private val maxRecordsPerBatch: Option[Long] =
     options.get("maxrecordsperbatch").map(_.toLong)
   require(maxRecordsPerBatch.forall(_ > 0), "maxRecordsPerBatch must be positive")
-  private val numSlots: Int = options.getOrElse("numpartitions", "4").toInt
+  private val maxPartitions: Int = options.getOrElse("numpartitions", "4").toInt
+  require(maxPartitions > 0, "numPartitions must be positive")
   private val startLatest: Boolean =
     options.getOrElse("startingposition", "earliest").equalsIgnoreCase("latest")
 
@@ -388,6 +414,11 @@ class ShardSimMicroBatchStream(path: String, options: Map[String, String])
     ShardOffsets(shards.map(s => s.shardId -> s.numRecords).toMap)
   }
 
+  /** min(`numPartitions`, active shards, ⌈records / [[MinRecordsPerPartition]]⌉)
+    * partitions: a function of the batch's (start, end) offsets alone, so
+    * a replayed batch plans as many partitions as the attempt it replays.
+    * Which shards share a partition is sticky across batches
+    * ([[ShardPlanner]]). */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[ShardOffsets].seqs
     val e = end.asInstanceOf[ShardOffsets].seqs
@@ -395,7 +426,9 @@ class ShardSimMicroBatchStream(path: String, options: Map[String, String])
     val active = shards.filter(sh =>
       e.getOrElse(sh.shardId, 0L) > s.getOrElse(sh.shardId, 0L))
     if (active.isEmpty) return Array.empty
-    val slots = 0 until math.min(numSlots, math.max(active.size, 1))
+    val records = active.map(sh => e(sh.shardId) - s.getOrElse(sh.shardId, 0L)).sum
+    val bySize = (records + MinRecordsPerPartition - 1) / MinRecordsPerPartition
+    val slots = 0 until math.min(math.min(maxPartitions, active.size).toLong, bySize).toInt
     val assignment = ShardPlanner.assign(slots, active.map(_.shardId), priorAssignment)
     priorAssignment = assignment
     val byId = active.map(sh => sh.shardId -> sh).toMap

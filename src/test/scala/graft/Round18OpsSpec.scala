@@ -187,7 +187,7 @@ class Round18OpsSpec extends SparkSpec {
     // 100 of 500 training vectors ON THE ISOTROPIC FIXTURE — the
     // worst case for any sampled estimator (no cluster structure to
     // estimate; full-Lloyd mean cos is only ~0.255 here). Measured
-    // delta 0.032; the bound pins "no cliff", and KmeansScale measures
+    // delta 0.032; the bound pins "no cliff", and BASELINE §x measures
     // the realistic (clustered, cap≫k) regime where the delta vanishes
     assert(qs >= qf - 0.05, s"sampled quality $qs vs full $qf")
   }

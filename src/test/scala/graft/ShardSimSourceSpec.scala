@@ -1009,4 +1009,113 @@ class ShardSimSourceSpec extends SparkSpec {
     assert(inputRows == Seq(48L, 48L), inputRows.mkString(", "))
     assert(IngestDedupApp.corpus(spark, corpus).count() == 96L)
   }
+
+  /** The input partitions a micro-batch stream over `dir` plans for the
+    * batch [start, end), as (shardId, start, end) ranges per partition. */
+  private def plan(dir: String, start: Map[String, Long], end: Map[String, Long],
+      options: Map[String, String] = Map.empty,
+      stream: Option[graft.sources.shardsim.ShardSimMicroBatchStream] = None)
+      : Seq[Seq[(String, Long, Long)]] = {
+    import graft.sources.shardsim.{ShardSim, ShardSimMicroBatchStream}
+    stream.getOrElse(new ShardSimMicroBatchStream(dir, options))
+      .planInputPartitions(ShardSim.ShardOffsets(start), ShardSim.ShardOffsets(end))
+      .toSeq.map(_.asInstanceOf[ShardSim.ShardSimInputPartition].ranges
+        .map(r => (r.shardId, r.start, r.end)))
+  }
+
+  private def shardDirOf(nShards: Int, records: Int): String = {
+    val dir = Files.createTempDirectory("shardsim_plan").toString
+    def row(i: Int) = (s"u$i", 1700000000000000L + i, s"""{"k":$i}""")
+    (0 until nShards).foreach(k =>
+      ShardSimFixture.writeShard(dir, k, (0 until records).map(row)))
+    dir
+  }
+
+  test("a small micro-batch plans one input partition holding every shard") {
+    val dir = shardDirOf(8, 50)
+    val start = (0 until 8).map(k => s"shard-$k" -> 0L).toMap
+    val end = start.map { case (k, _) => k -> 50L }
+    val parts = plan(dir, start, end)
+    assert(parts.size == 1, parts.toString)
+    assert(parts.head.sorted == (0 until 8).map(k => (s"shard-$k", 0L, 50L)),
+      parts.toString)
+  }
+
+  test("a large micro-batch fans out to numPartitions, each shard range " +
+      "exactly once") {
+    import graft.sources.shardsim.ShardSim.MinRecordsPerPartition
+    val perShard = 1200L
+    val dir = shardDirOf(8, perShard.toInt)
+    val start = (0 until 8).map(k => s"shard-$k" -> 0L).toMap
+    val end = start.map { case (k, _) => k -> perShard }
+    Seq(4, 3).foreach { cap =>
+      assert(8 * perShard >= cap * MinRecordsPerPartition)
+      val parts = plan(dir, start, end, Map("numpartitions" -> cap.toString))
+      assert(parts.size == cap && parts.forall(_.nonEmpty), parts.toString)
+      assert(parts.flatten.sorted == (0 until 8).map(k => (s"shard-$k", 0L, perShard)),
+        parts.toString)
+    }
+    // between the two: one partition per MinRecordsPerPartition records
+    val mid = start.map { case (k, _) => k -> 200L }
+    assert(plan(dir, start, mid).size ==
+      ((8 * 200L + MinRecordsPerPartition - 1) / MinRecordsPerPartition).toInt)
+    // never more partitions than shards with records in the batch
+    val two = start ++ Map("shard-0" -> perShard, "shard-1" -> perShard)
+    assert(2 * perShard > 2 * MinRecordsPerPartition)
+    assert(plan(dir, start, two).size == 2)
+  }
+
+  test("a fresh stream, as after a restart, plans the same partition " +
+      "count for the same offsets") {
+    import graft.sources.shardsim.ShardSimMicroBatchStream
+    val dir = shardDirOf(8, 1200)
+    val live = new ShardSimMicroBatchStream(dir, Map.empty)
+    // batches of growing size, planned by one long-lived stream whose
+    // sticky assignment carries from batch to batch
+    val sizes = Seq(50L, 100L, 300L, 600L, 150L)
+    val bounds = sizes.scanLeft(0L)(_ + _)
+    bounds.zip(bounds.tail).foreach { case (a, b) =>
+      val start = (0 until 8).map(k => s"shard-$k" -> a).toMap
+      val end = start.map { case (k, _) => k -> b }
+      val first = plan(dir, start, end, stream = Some(live))
+      val replay = plan(dir, start, end)
+      assert(first.size == replay.size, (a, b, first, replay))
+      assert(first.flatten.sorted == replay.flatten.sorted, (a, b))
+    }
+  }
+
+  test("a drain of small micro-batches writes each trigger with one task") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("shardsim_onetask").toString
+    ShardSimFixture.generate(spark, sf0001, dir, nShards = 8)
+    val out = Files.createTempDirectory("onetask_out").toString
+    val ckpt = Files.createTempDirectory("onetask_ckpt").toString
+    // (query id, batch id, tasks) of every job a streaming query runs
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+          .foreach(id => jobs.add((id, e.properties.getProperty("streaming.sql.batchId"),
+            e.stageInfos.map(_.numTasks).sum)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = ConsumeApp.run(spark, dir, out, ckpt, maxRecordsPerBatch = Some(400L))
+      q.awaitTermination()
+      q
+    } finally {
+      Thread.sleep(500) // the listener bus is asynchronous
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val batches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId.toString).toSet
+    assert(batches.size >= 3, s"expected several capped batches, got $batches")
+    val tasks = scala.jdk.CollectionConverters.CollectionHasAsScala(jobs).asScala.toSeq
+      .filter(_._1 == q.id.toString)
+      .groupMapReduce(_._2)(_._3)(_ + _)
+    assert(tasks.keySet == batches, s"$tasks vs $batches")
+    assert(tasks.values.forall(_ == 1), s"tasks per trigger: $tasks")
+    val result = spark.read.parquet(s"$out/batch_id=*")
+    assert(result.count() == nEvents)
+    assert(result.select("event_id").distinct().count() == nEvents)
+  }
 }
